@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .joins import grid_align, minute_grid
-
 
 def deterministic_mode(
     df: DataFrame,
@@ -50,11 +48,11 @@ def deterministic_mode(
     )
 
 
-def hourly_agg(obs: DataFrame) -> DataFrame:
+def hourly_agg(obs: DataFrame, *extra: Column) -> DataFrame:
     """A4/A5/A8 per (date, location, hour) over Silver rows
     (daily_compile_weather.py:60-94). Spark aggregates ignore nulls natively
     (P9's non-null comprehension is free); only the sum needs the
-    empty→0 coalesce."""
+    empty→0 coalesce. ``extra`` aggregates ride along in the same groupBy."""
     return obs.groupBy("date", "location_id", "location_name", "hour").agg(
         F.round(F.avg("temp_c"), 2).alias("temp_avg"),
         F.min("temp_c").alias("temp_min"),
@@ -62,29 +60,7 @@ def hourly_agg(obs: DataFrame) -> DataFrame:
         F.round(F.avg("humidity"), 2).alias("humidity_avg"),
         F.round(F.avg("wind_kph"), 2).alias("wind_avg_kph"),
         F.coalesce(F.sum("precip_mm"), F.lit(0.0)).alias("precip_mm"),
-    )
-
-
-def hourly_data_points(obs: DataFrame) -> DataFrame:
-    """J4 + A9 inner level: minute-grid-aligned ``data_points`` array per
-    (date, location, hour). Missing 10-min slots become all-null minute docs
-    (daily_compile_weather.py:34-58)."""
-    grid = minute_grid(obs.sparkSession)
-    aligned = grid_align(
-        obs.select(
-            "date", "location_id", "hour", "minute",
-            F.col("temp_c").alias("temp"), "humidity", "wind_kph",
-            "wind_dir", "precip_mm",
-        ),
-        grid,
-        group_keys=["date", "location_id", "hour"],
-    )
-    return aligned.groupBy("date", "location_id", "hour").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct("minute", "temp", "humidity", "wind_kph", "wind_dir", "precip_mm")
-            )
-        ).alias("data_points")
+        *extra,
     )
 
 
@@ -204,32 +180,61 @@ def standardize(
 
 
 def daily_recap(obs: DataFrame) -> DataFrame:
-    """The full Gold assembly (daily_compile_weather.py:96-134), one
-    distributed plan instead of the reference's 27 per-location round-trips
-    (SURVEY §4.2):
+    """The full Gold assembly (daily_compile_weather.py:96-134) as one plan
+    with ONE exchange, not the reference's 27 per-location round-trips
+    (SURVEY §4.2): ``obs`` is hash-partitioned on (date, location_id), and
+    every later operator is keyed on a superset of those columns.
 
-    hourly aggregates (A4/A5/A8) ⋈ deterministic wind mode (A6)
-    ⋈ grid-aligned data_points (J4/A9) → W2 completeness flag →
-    nested re-assembly into {date, location, hourly: [...]} (A9).
+    A window over (date, location_id, hour) hands each row its hour's docs —
+    a window, not a groupBy, so an hour with two ``location_name`` values
+    keeps one hourly row per name, each with all of the hour's docs.
+    :func:`hourly_agg` (A4/A5/A8) keeps one list per hourly row, and
+    higher-order functions over it give the wind mode of
+    :func:`deterministic_mode` (A6) and the data points :func:`grid_align`
+    gives over :func:`minute_grid` (J4/A9). Then the W2 completeness flag
+    and the nest into {date, location, hourly: [...]} (A9).
 
     Hours with no observations are skipped (DAG behavior,
     daily_compile_weather.py:123-124); the null-fill grid exists only at
     minute level (SURVEY §7.2).
     """
-    keys = ["date", "location_id", "hour"]
-    hours = hourly_agg(obs)
-    mode = deterministic_mode(
-        obs, keys, value_col="wind_dir", order_col="minute",
-        out_col="dominant_wind_dir",
+    doc = F.struct(
+        "minute", F.col("temp_c").alias("temp"), "humidity", "wind_kph",
+        "wind_dir", "precip_mm",
     )
-    points = hourly_data_points(obs)
-    hourly = hours.join(mode, on=keys, how="left").join(points, on=keys, how="left")
+    docs = F.collect_list(doc).over(Window.partitionBy("date", "location_id", "hour"))
+    hours = hourly_agg(
+        obs.repartition("date", "location_id").withColumn("__docs", docs),
+        F.first("__docs").alias("__docs"),
+    )
+    fields = hours.schema["__docs"].dataType.elementType.fields
 
-    # W2: day-completeness flag stamped on every hour row.
-    day_w = Window.partitionBy("date", "location_id")
-    hourly = hourly.withColumn(
-        "full_recap", F.max(F.col("hour") == F.lit("23")).over(day_w)
+    # A6: min (-count, minute, value) is most frequent, then first seen, then least.
+    winds = F.filter("__docs", lambda d: d["wind_dir"].isNotNull())
+    mode = F.array_min(F.transform(winds, lambda d: F.struct(
+        -F.size(F.filter(winds, lambda e: e["wind_dir"] == d["wind_dir"])),
+        d["minute"],
+        d["wind_dir"].alias("v"),
+    )))["v"]
+
+    # J4: the docs at grid minutes, plus an all-null doc per empty slot.
+    grid = F.array(*[F.lit(f"{m:02d}") for m in range(0, 60, 10)])
+    nulls = [F.lit(None).cast(f.dataType).alias(f.name) for f in fields[1:]]
+    points = F.concat(
+        F.filter("__docs", lambda d: F.array_contains(grid, d["minute"])),
+        F.transform(
+            F.array_except(grid, F.transform("__docs", lambda d: d["minute"])),
+            lambda m: F.struct(m.alias("minute"), *nulls),
+        ),
     )
+    hourly = hours.withColumns({
+        "dominant_wind_dir": mode,
+        "data_points": F.array_sort(points),
+        # W2: day-completeness flag stamped on every hour row.
+        "full_recap": F.max(F.col("hour") == F.lit("23")).over(
+            Window.partitionBy("date", "location_id")
+        ),
+    })
 
     return hourly.groupBy("date", "location_id", "location_name").agg(
         F.array_sort(

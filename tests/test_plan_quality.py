@@ -283,3 +283,29 @@ def test_ppl_bucket_split_has_no_unpartitioned_window(spark):
     assert windows, "expected the partitioned local-rank Window"
     for ln in windows:
         assert ln.count("], [") == 2, f"unpartitioned Window: {ln}"
+
+
+def test_daily_recap_plans_one_exchange_and_no_join(spark):
+    """daily_recap's hourly aggregate, hour window, day window and nest are
+    all keyed on a superset of (date, location_id), and the wind mode and
+    data points are computed from the hour window's list: with AQE off the
+    executed plan holds exactly one hash exchange, on those two columns,
+    and no join."""
+    import re
+
+    from etl_weather_jabar_spark.operators.aggregates import daily_recap
+    from tests.fixtures import silver_fixture
+
+    saved = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        recap = daily_recap(silver_fixture(spark))
+        plan = recap._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", saved)
+    exchanges = re.findall(r"Exchange (\w+)\(([^)]*)\)", plan)
+    assert len(exchanges) == 1, exchanges
+    kind, cols = exchanges[0]
+    assert kind == "hashpartitioning", exchanges
+    assert re.fullmatch(r"date#\d+, location_id#\d+L?, \d+", cols), exchanges
+    assert not re.search(r"Join|CartesianProduct", plan), plan

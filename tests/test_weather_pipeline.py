@@ -314,3 +314,167 @@ def test_recap_to_snapshot_idempotent_merge(spark, tmp_path):
         ).collect()
     } == keys1
     assert [h["version"] for h in snapshot_history(gold)] == [1, 2]
+
+
+def _reference_recap(obs):
+    """The Gold recap composed from the public operators, one plan step per
+    reference concern: hourly aggregates ⋈ deterministic wind mode ⋈
+    grid-aligned data points, then the day window and the nest."""
+    from pyspark.sql import Window
+
+    from etl_weather_jabar_spark.operators import (
+        deterministic_mode,
+        grid_align,
+        hourly_agg,
+        minute_grid,
+    )
+
+    keys = ["date", "location_id", "hour"]
+    doc = ["minute", "temp", "humidity", "wind_kph", "wind_dir", "precip_mm"]
+    mode = deterministic_mode(
+        obs, keys, value_col="wind_dir", order_col="minute",
+        out_col="dominant_wind_dir",
+    )
+    aligned = grid_align(
+        obs.select(*keys, "minute", F.col("temp_c").alias("temp"), *doc[2:]),
+        minute_grid(obs.sparkSession),
+        group_keys=keys,
+    )
+    points = aligned.groupBy(*keys).agg(
+        F.array_sort(F.collect_list(F.struct(*doc))).alias("data_points")
+    )
+    hourly = (
+        hourly_agg(obs)
+        .join(mode, on=keys, how="left")
+        .join(points, on=keys, how="left")
+        .withColumn(
+            "full_recap",
+            F.max(F.col("hour") == "23").over(
+                Window.partitionBy("date", "location_id")
+            ),
+        )
+    )
+    return hourly.groupBy("date", "location_id", "location_name").agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct(
+                    "hour", "full_recap", "temp_avg", "temp_min", "temp_max",
+                    "humidity_avg", "wind_avg_kph", "dominant_wind_dir",
+                    "precip_mm", "data_points",
+                )
+            )
+        ).alias("hourly")
+    )
+
+
+def _recap_edge_silver(spark):
+    """Silver rows for the recap's edge cases (see the differential test).
+    One input partition: both compositions then sum each hour's doubles in
+    the same row order, so averages compare bit for bit."""
+    from etl_weather_jabar_spark.schemas import WEATHER_DATA
+
+    n = iter(range(1000))
+
+    def row(date, loc, hour, minute, temp, wdir, precip, *, name=None,
+            hum=80, wind=10.0):
+        return {
+            "_id": f"e{next(n):03d}",
+            "timestamp": f"{date} {hour}:{minute}:00",
+            "date": date, "hour": hour, "minute": minute,
+            "location_id": loc, "location_name": name or f"LOC_{loc}",
+            "lat": -6.9, "lon": 107.6, "temp_c": temp,
+            "feelslike_c": None if temp is None else temp + 1.0,
+            "humidity": hum, "wind_kph": wind, "wind_dir": wdir,
+            "wind_degree": 45, "precip_mm": precip, "is_day": 1, "uv": 5.0,
+            "cloud": 40, "condition": "Sunny",
+        }
+
+    d1, d2 = "2024-03-01", "2024-03-02"
+    rows = [
+        # two location_name values in one (date, location, hour)
+        row(d1, 1, "07", "00", 29.9, "N", 0.1, wind=29.9),
+        row(d1, 1, "07", "10", 13.7, "N", 0.2, name="LOC_1 (renamed)", wind=13.7),
+        row(d1, 1, "07", "20", 22.9, "E", 0.3, wind=22.9),
+        row(d1, 1, "07", "30", 7.8, "E", None, name="LOC_1 (renamed)", wind=7.8),
+        # off-grid minute "05" and a duplicated minute "10"
+        row(d1, 1, "08", "05", 24.1, "SE", 1.1, hum=71),
+        row(d1, 1, "08", "10", 24.3, "SE", 0.7, hum=74),
+        row(d1, 1, "08", "10", 24.6, "S", 0.0, hum=77),
+        row(d1, 1, "08", "40", 25.2, "S", 0.4, hum=79),
+        # wind_dir all null
+        row(d1, 1, "09", "00", 26.0, None, 0.0),
+        row(d1, 1, "09", "30", 26.7, None, 0.2),
+        # count tie 2-2 decided by first-seen minute: S (:00) over E
+        row(d1, 1, "10", "00", 27.1, "S", 0.0),
+        row(d1, 1, "10", "10", 27.4, "E", 0.0),
+        row(d1, 1, "10", "20", 27.3, "E", 0.0),
+        row(d1, 1, "10", "30", 27.9, "S", 0.0),
+        # full tie (count 1, same minute) decided by value: N over W
+        row(d1, 1, "11", "00", 28.2, "W", 0.0),
+        row(d1, 1, "11", "00", 28.4, "N", 0.0),
+        # precip_mm all null → 0.0
+        row(d1, 1, "12", "00", 28.8, "NW", None),
+        row(d1, 1, "12", "20", 28.5, "NW", None),
+        # hour 23 present: full_recap true for every hour of (d1, 1)
+        row(d1, 1, "23", "50", 23.3, "W", 0.0),
+        # (d1, 2) and (d2, 1) have no hour 23
+        row(d1, 2, "07", "00", 21.0, "NE", 0.5, hum=None, wind=None),
+        row(d1, 2, "07", "50", 21.6, "NE", 0.6),
+        row(d2, 1, "00", "00", 22.2, "SW", 0.0),
+        row(d2, 1, "00", "10", 22.0, "W", 0.1),
+    ]
+    return spark.createDataFrame(rows, WEATHER_DATA).coalesce(1)
+
+
+def test_daily_recap_equals_reference_composition(spark):
+    """The one-exchange daily_recap equals the operator composition it
+    replaced, averages included, on hand-made edge cases — under the
+    default session and under a degraded plan (AQE off, 7 shuffle
+    partitions, no broadcast)."""
+    silver = _recap_edge_silver(spark)
+    degraded = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": "7",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+
+    def collect(df):
+        return sorted(df.collect(), key=lambda r: tuple(r[:3]))
+
+    def check():
+        got, want = daily_recap(silver), _reference_recap(silver)
+        assert got.schema == want.schema
+        got_rows, want_rows = collect(got), collect(want)
+        assert got_rows == want_rows
+        return got_rows
+
+    rows = check()
+    saved = {k: spark.conf.get(k) for k in degraded}
+    try:
+        for k, v in degraded.items():
+            spark.conf.set(k, v)
+        assert check() == rows
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+    # the edge cases are really in the data and resolved as the reference does
+    docs = {(r["date"], r["location_id"], r["location_name"]): r for r in rows}
+    assert len(docs) == 4
+    hours = {h["hour"]: h for h in docs[("2024-03-01", 1, "LOC_1")]["hourly"]}
+    renamed = docs[("2024-03-01", 1, "LOC_1 (renamed)")]["hourly"]
+    assert [h["hour"] for h in renamed] == ["07"]
+    assert renamed[0]["data_points"] == hours["07"]["data_points"]
+    assert hours["07"]["dominant_wind_dir"] == "N"
+    minutes = [p["minute"] for p in hours["08"]["data_points"]]
+    assert minutes == ["00", "10", "10", "20", "30", "40", "50"]
+    assert hours["09"]["dominant_wind_dir"] is None
+    assert hours["10"]["dominant_wind_dir"] == "S"
+    assert hours["11"]["dominant_wind_dir"] == "N"
+    assert hours["12"]["precip_mm"] == 0.0
+    assert all(h["full_recap"] for h in hours.values())
+    assert not any(
+        h["full_recap"]
+        for k in [("2024-03-01", 2, "LOC_2"), ("2024-03-02", 1, "LOC_1")]
+        for h in docs[k]["hourly"]
+    )

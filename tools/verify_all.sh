@@ -2,7 +2,8 @@
 # The full gate chain in one command — what every round-end certification
 # ran by hand. ~25 min on local[32]:
 #   oracle at sf0.001/0.01/0.1, adversarial-conf oracle at sf0.01,
-#   full pytest, bench, entry smoke. Exits nonzero on the first failure.
+#   perfbench self-test, full pytest, bench, entry smoke. Exits nonzero on
+#   the first failure.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -23,6 +24,10 @@ echo "=== DIFFERENTIAL FUZZ (40 seeded cases) ==="
 python tools/fuzz_differential.py /root/testdata/sf0.01 40 7 | tail -1 | grep -q "^0 mismatches" \
   || { echo "FUZZ FAILED"; exit 1; }
 echo "0 mismatches"
+
+echo "=== PERFBENCH SELFTEST (generator + correctness checks) ==="
+python3 perfbench/selftest.py > /dev/null || { echo "PERFBENCH SELFTEST FAILED"; exit 1; }
+echo "ok"
 
 echo "=== PYTEST ==="
 python -m pytest tests/ -q | tail -2
